@@ -167,8 +167,8 @@ object Bench {
     // in-process, so process CPU covers the whole query.
     // the com.sun interface is HotSpot-specific — degrade to cpu=-1
     // rather than crashing Bench on a JVM whose bean doesn't carry it.
-    // One shared probe (core.PhaseLog.cpuNanos) serves Bench, PhaseLog
-    // and DegradeProbe so the sentinel handling can't drift.
+    // One shared probe (core.PhaseLog.cpuNanos) serves Bench and
+    // PhaseLog so the sentinel handling can't drift.
     def cpuNow(): Long = graft.core.PhaseLog.cpuNanos()
     if (cpuNow() < 0)
       System.err.println("[bench] process CPU time unavailable on this JVM")

@@ -1,16 +1,33 @@
 package graft
 
-
-/** Plan inspector: `runMain graft.Explain <queryName> [sfDir]` prints the
-  * formatted physical plan for one SparkEntry query — the per-operator
-  * feedback loop for shuffle/pushdown/codegen auditing. */
+/** Plan dumper: `runMain graft.Explain <outDir> [name...]` — writes each
+  * named query's `explain("formatted")` output to `<outDir>/<name>.txt`,
+  * every registered query when no name is given, in ONE JVM (one
+  * sbt+JVM startup for a whole plan audit). Same session recipe as the
+  * other mains; the corpus is `$SPARK_GRAFT_SF_DIR`. */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val name = args(0)
-    val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
+    val outDir = args(0)
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val names =
+      if (args.length > 1) args.drop(1).toSeq
+      else SparkEntry.queries.keys.toSeq.sorted
     val spark = graft.core.Sessions.local(cpus)
-    SparkEntry.queries(name)(spark, sfDir).explain("formatted")
+    new java.io.File(outDir).mkdirs()
+    names.foreach { name =>
+      val plan =
+        try {
+          val qe = SparkEntry.queries(name)(spark, sfDir).queryExecution
+          qe.explainString(
+            org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+        } catch {
+          case e: Throwable => s"EXPLAIN FAILED: ${e.getMessage}"
+        }
+      java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(outDir, s"$name.txt"), plan)
+      println(s"[explain] wrote $name")
+    }
     spark.stop()
   }
 }

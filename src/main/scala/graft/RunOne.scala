@@ -4,10 +4,12 @@ package graft
 /** Focused timing loop for one query:
   * `runMain graft.RunOne <queryName> [sfDir] [reps]` — runs the query
   * `reps` times in one session (first run shows cold cost incl. JVM/
-  * codegen warmup, later runs the warm cost), printing wall time each
-  * rep. The single-query complement to [[Bench]] when iterating on one
-  * operator's plan — reads the SAME `SPARK_GRAFT_CPUS` env with the same
-  * default, so its numbers are comparable to the bench's.
+  * codegen warmup, later runs the warm cost), printing wall time, the
+  * top stages by CPU ([[StageProbe]]) and the live-thread histogram
+  * ([[ThreadProbe]]) each rep. The single-query complement to [[Bench]]
+  * when iterating on one operator's plan — reads the SAME
+  * `SPARK_GRAFT_CPUS` env with the same default, so its numbers are
+  * comparable to the bench's.
   */
 object RunOne {
   def main(args: Array[String]): Unit = {
@@ -28,6 +30,7 @@ object RunOne {
         .write.format("noop").mode("overwrite").save()
       println(f"[graft] run $i: $name in ${(System.nanoTime() - t0) / 1e9}%.2f s")
       StageProbe.printTop(s"run $i")
+      ThreadProbe.printTop(s"run $i")
       System.gc()
     }
     spark.stop()

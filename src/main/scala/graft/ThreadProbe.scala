@@ -1,9 +1,9 @@
 package graft
 
-/** Diagnostic (round-6 verdict #3): histogram of live thread names after
-  * repeated streaming-sink runs, to locate the pools that outlive
-  * `runStreamToParquet` (bench-end `threads=1030` in the r5 judge run).
-  * Usage: runMain graft.ThreadProbe [queryName] [reps]. */
+/** Histogram of live thread names, to locate pools that outlive a query
+  * (bench-end `threads=1030` in the r5 judge run came from streaming
+  * sinks). Printed by [[Bench]] at the end of a run and by [[RunOne]]
+  * after each rep. */
 object ThreadProbe {
   def histo(): Map[String, Int] = {
     val t = new Array[Thread](Thread.activeCount() * 2 + 16)
@@ -19,18 +19,5 @@ object ThreadProbe {
     h.toSeq.sortBy(-_._2).take(12).foreach { case (k, v) =>
       println(f"[probe]   $v%4d  $k")
     }
-  }
-
-  def main(args: Array[String]): Unit = {
-    val name = args.headOption.getOrElse("stream_sessionize_sink")
-    val reps = args.lift(1).map(_.toInt).getOrElse(3)
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = graft.core.Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-    printTop("start")
-    (1 to reps).foreach { i =>
-      val n = SparkEntry.queries(name)(spark, sfDir).count()
-      printTop(s"after rep $i ($name rows=$n)")
-    }
-    spark.stop()
   }
 }

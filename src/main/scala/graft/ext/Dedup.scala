@@ -195,20 +195,12 @@ object Dedup {
 
   // --- MinHash + LSH -----------------------------------------------------
 
-  /** MinHash signature: element i = min over shingles of xxhash64(i, s).
-    * Seeding by position gives `numHashes` independent-enough permutations
-    * from one pass over the shingle array (no per-hash shuffle).
-    * (Array/HOF convenience form — [[minhashSignatures]] is the codegen
-    * path used by the candidate miner.) */
-  def minhashSignature(shingles: Column, numHashes: Int): Column =
-    array((0 until numHashes).map { i =>
-      array_min(transform(shingles, s => xxhash64(lit(i), s)))
-    }: _*)
-
-  /** MinHash signatures relationally: `numHashes` codegen'd
-    * `min(xxhash64(i, s))` aggregates over shingle rows — one hash-agg
-    * shuffle on id, no interpreted HOFs. Docs with no shingles are simply
-    * absent. Returns `(id, sig: array<long>)`. */
+  /** MinHash signatures relationally: element i = min over a doc's
+    * shingles of xxhash64(i, s) — seeding by position gives `numHashes`
+    * independent-enough permutations — as `numHashes` codegen'd
+    * aggregates over shingle rows: one hash-agg shuffle on id, no
+    * interpreted HOFs. Docs with no shingles are simply absent. Returns
+    * `(id, sig: array<long>)`. */
   def minhashSignatures(
       shingles: DataFrame /* (id, s) distinct */,
       numHashes: Int): DataFrame = {

@@ -52,8 +52,10 @@ object PatternExtraction {
     *                         direction/position hit (Parallel:104)
     * @param guardSpeedMps    distance guard factor: a "gap" whose
     *                         endpoints moved < guard×(threshold−1) m is a
-    *                         stop, not a blind zone (Standalone:93) */
-  /** @param restoredNumbering true (default) = the gaps-and-islands
+    *                         stop, not a blind zone (Standalone:93)
+    * @param qualify          false skips the terminus qualification gate,
+    *                         for feeds without terminus geography
+    * @param restoredNumbering true (default) = the gaps-and-islands
     *                           numbering restoring the reference's evident
     *                           intent (class doc); false = bug-compatible
     *                           with the reference AS COMMITTED, whose

@@ -76,17 +76,6 @@ object TrajectoryClustering {
       .toMap
   }
 
-  /** [[paramsFrom]] over a header CSV file (the reference's exact input
-    * shape, `Sample Data/lines95_parameter.csv`). */
-  def paramsFromCsv(spark: org.apache.spark.sql.SparkSession,
-                    path: String): Map[String, Params] = {
-    import org.apache.spark.sql.types._
-    paramsFrom(graft.sources.Csv.read(spark, path, StructType(Seq(
-      StructField("new_linenumber", StringType),
-      StructField("eps", DoubleType),
-      StructField("min_samples", IntegerType)))))
-  }
-
   /** Assemble time-ordered trajectories:
     * (linenumber, id, patternID) → array<struct<lng,lat>>. */
   def assemble(patterns: DataFrame): DataFrame =
@@ -98,6 +87,9 @@ object TrajectoryClustering {
           p.getField("lng").cast("double").as("lng"),
           p.getField("lat").cast("double").as("lat"))))
       .drop("_tpts")
+
+  /** Ways the distributed pair scan salts each line (see [[cluster]]). */
+  private val PairSalts = 16
 
   /** Cluster each line's trajectories; returns
     * `(linenumber, id, patternID, cluster)` with −1 = noise.
@@ -117,9 +109,9 @@ object TrajectoryClustering {
     *     7-field summary before any pairing. Point arrays never enter the
     *     pair stage.
     *  2. The O(T²) pair grid is a SALTED equi-join over those summaries
-    *     (probe keyed by `tid % pairSalts`, build side replicated
-    *     `pairSalts` ways): one giant line's pair work spreads over
-    *     `pairSalts` tasks instead of serializing in one — the "sub-split
+    *     (probe keyed by `tid % PairSalts`, build side replicated
+    *     `PairSalts` ways): one giant line's pair work spreads over
+    *     `PairSalts` tasks instead of serializing in one — the "sub-split
     *     oversized lines" the reference's driver-side bin-packing
     *     (TC-P:60–136) could not do. Replication is of 56-byte summary
     *     rows, not data.
@@ -151,7 +143,6 @@ object TrajectoryClustering {
     * `TrajectoryClusteringSpec` asserts both paths bit-equal.
     */
   def cluster(patterns: DataFrame, params: Map[String, Params],
-              pairSalts: Int = 16,
               maxLocalPairs: Long = 4000000L): DataFrame = {
     val assembled = assemble(patterns)
     val spark = assembled.sparkSession
@@ -230,10 +221,10 @@ object TrajectoryClustering {
     // needs no further exchange since both sides arrive partitioned on
     // exactly the join key.
     val numParts = spark.sessionState.conf.numShufflePartitions
-    val probe = summaries.withColumn("salt", pmod(col("tid"), lit(pairSalts)))
+    val probe = summaries.withColumn("salt", pmod(col("tid"), lit(PairSalts)))
       .repartition(numParts, col("line"), col("salt"))
     val build = summaries.withColumn("salt",
-      explode(sequence(lit(0), lit(pairSalts - 1))))
+      explode(sequence(lit(0), lit(PairSalts - 1))))
       .repartition(numParts, col("line"), col("salt"))
     // DBSCAN's output depends only on each point's eps-NEIGHBORHOOD set
     // (see Dbscan.fitAdjacency), so only pairs that can be edges cross

@@ -796,10 +796,6 @@ object Ext {
   /** Training units for [[textBpeTrain]]: consecutive
     * [[BpeChunkTokens]]-token chunks of each document joined by the
     * "▁" boundary marker, collapsed to a capped TYPE table. */
-  /** Probe-visible alias for [[bpeUnits]] (tooling only). */
-  def bpeUnitsForProbe(s: SparkSession, dir: String): DataFrame =
-    bpeUnits(s, dir)
-
   private[queries] def bpeUnits(s: SparkSession, dir: String): DataFrame = {
     // r12 OPTIMIZATION (guide §4.1 — higher-order functions don't enter
     // whole-stage codegen): the chunker used to be a

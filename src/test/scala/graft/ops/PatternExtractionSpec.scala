@@ -93,15 +93,28 @@ class PatternExtractionSpec extends SparkSpec {
   }
 
   test("reference sample data smoke: mixed formats, runs end to end") {
-    val raw = spark.read.option("header", "true")
-      .csv("/root/reference/Sample Data/gps.csv")
+    // gps_sample.csv has the reference sample's shape (FIXTURES.md §1):
+    // 5 vehicles on one day, `linenumber` a per-vehicle row sequence,
+    // `yy-MM-dd` and `yyyy-MM-dd` timestamps mixed in one file, and 2–3
+    // signal gaps of 600 s / ~8 km per vehicle
+    val lines = scala.io.Source.fromResource("gps_sample.csv").getLines().toSeq
+    val raw = spark.read.option("header", "true").csv(lines.toDS())
+    val formats = raw.select(graft.core.TimeOps.matchedFormat($"t")).as[String]
+      .collect().toSet
+    assert(formats == graft.core.TimeOps.GpsFormats.toSet, s"formats=$formats")
+
     val prep = PatternExtraction.prepare(raw, busLine = None)
-    assert(prep.filter($"t".isNull).count() == 0, "all timestamps must parse")
-    val pats = PatternExtraction.extractPatterns(prep)
-    // sample linenumber column is a per-vehicle sequence (FIXTURES.md) and
-    // there is no bus_line blob → qualification may drop all vehicles;
-    // the run must still be well-formed
-    assert(pats.columns.contains("patternID"))
-    assert(pats.count() >= 0)
+    assert(prep.count() == lines.size - 1)
+    assert(prep.filter($"t".isNull || year($"t") =!= 2019).count() == 0,
+      "every timestamp must parse to its 2019 date")
+    // no bus_line table means no terminus geography, so the qualification
+    // gate drops every vehicle; with it off each vehicle's gaps split it
+    assert(PatternExtraction.extractPatterns(prep).count() == 0)
+    val pats = PatternExtraction.extractPatterns(prep,
+      PatternExtraction.Config(qualify = false))
+    val perVehicle = pats.groupBy($"id").agg(max($"patternID")).as[(String, Long)]
+      .collect().toMap
+    assert(perVehicle.keySet == (1 to 5).map(v => f"$v%05d").toSet, s"got $perVehicle")
+    assert(perVehicle.values.forall(_ >= 2), s"got $perVehicle")
   }
 }
